@@ -127,10 +127,3 @@ def rows_as_json(df: DataFrame) -> DataFrame:
     (BQReidentificationPipeline.java:242-257). ``to_json`` omits null
     fields, matching Gson's skipped absent keys."""
     return df.select(F.to_json(F.struct(*df.columns)).alias("message"))
-
-
-def header_signature(columns: list[str]) -> str:
-    """Comma-joined header key (BQReidentificationPipeline.java:150) —
-    deterministic (sorted) where the reference depends on JSON map
-    iteration order (known hazard, SURVEY.md §7.4.4)."""
-    return ",".join(sorted(columns))

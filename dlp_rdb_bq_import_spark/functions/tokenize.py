@@ -222,9 +222,8 @@ def _fpe_distinct_join(
     (AQE broadcasts the mapping when it is small; a map-side partial
     aggregate makes the distinct scan cheap, and parquet column pruning
     means it reads only the token columns). Trade-off: the input is
-    scanned twice, so for unique-per-row values prefer ``strategy="map"``.
-    Requires a deterministic input plan (the distinct scan and the main
-    scan must see the same values).
+    scanned twice. Requires a deterministic input plan (the distinct scan
+    and the main scan must see the same values).
     """
     if _FPE_VAL in df.columns or _FPE_TOK in df.columns:
         raise ValueError(
@@ -268,23 +267,18 @@ def _transform_df(
     template: DeidTemplate,
     forward: bool,
     null_to_empty: bool = False,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Apply (de|re)identification.
 
-    Whole-field FPE columns run encrypt-distinct-then-join by default
-    (``strategy="auto"``/``"distinct_join"`` — see ``_fpe_distinct_join``;
-    pass ``"map"`` to force the single-pass per-row path for
-    unique-per-row values or nondeterministic inputs). InfoType inspect
-    columns always run as one ``mapInPandas`` pass over Arrow batches —
+    Whole-field FPE columns run encrypt-distinct-then-join (see
+    ``_fpe_distinct_join``). InfoType inspect columns run as one
+    ``mapInPandas`` pass over Arrow batches —
     mirroring the reference's one-DLP-request-per-split batching
     (DLPTokenizationDoFn.java:93-117) with no Python-per-row overhead.
     Configured columns are stringified first (the DLP path stringifies
     everything, DLPTokenizationDoFn.java:79-88); ``null_to_empty``
     reproduces null→"" compat (:84-87).
     """
-    if strategy not in ("auto", "distinct_join", "map"):
-        raise ValueError(f"unknown FPE strategy {strategy!r}")
     target_cols: dict[str, tuple] = {}
     for ft in template.field_transforms:
         cipher = FPECipher(template.key, ft.alphabet)
@@ -307,7 +301,7 @@ def _transform_df(
     inspect_present = [c for c in present if target_cols[c][0] == "inspect"]
 
     out = casted
-    if fpe_present and strategy != "map":
+    if fpe_present:
         by_cipher: dict[tuple, list[str]] = {}
         for c in fpe_present:
             _, cipher, tweak = target_cols[c]
@@ -317,36 +311,30 @@ def _transform_df(
             for (key, alphabet, tweak), cols in by_cipher.items()
         ]
         out = _fpe_distinct_join(out, groups, forward)
-        map_cols = inspect_present
-    else:
-        map_cols = present
 
-    if not map_cols:
+    if not inspect_present:
         return out
 
     out_schema = T.StructType(
         [
-            T.StructField(f.name, T.StringType() if f.name in map_cols else f.dataType, True)
+            T.StructField(
+                f.name, T.StringType() if f.name in inspect_present else f.dataType, True
+            )
             for f in out.schema.fields
         ]
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for col in map_cols:
+            for col in inspect_present:
                 if col not in pdf.columns:
                     continue
-                spec = target_cols[col]
-                if spec[0] == "fpe":
-                    _, cipher, tweak = spec
-                    pdf[col] = _fpe_map_series(pdf[col], cipher, forward, tweak)
-                else:
-                    _, cipher, info_types, surrogate = spec
-                    pdf[col] = (
-                        _inspect_series(pdf[col], cipher, info_types, surrogate)
-                        if forward
-                        else _uninspect_series(pdf[col], cipher, surrogate)
-                    )
+                _, cipher, info_types, surrogate = target_cols[col]
+                pdf[col] = (
+                    _inspect_series(pdf[col], cipher, info_types, surrogate)
+                    if forward
+                    else _uninspect_series(pdf[col], cipher, surrogate)
+                )
             yield pdf
 
     return out.mapInPandas(run, schema=out_schema)
@@ -356,17 +344,14 @@ def deidentify(
     df: DataFrame,
     template: DeidTemplate,
     null_to_empty: bool = False,
-    strategy: str = "auto",
 ) -> DataFrame:
     """T1 — table de-identification (DLPTokenizationDoFn.java:66-159)."""
-    return _transform_df(
-        df, template, forward=True, null_to_empty=null_to_empty, strategy=strategy
-    )
+    return _transform_df(df, template, forward=True, null_to_empty=null_to_empty)
 
 
-def reidentify(df: DataFrame, template: DeidTemplate, strategy: str = "auto") -> DataFrame:
+def reidentify(df: DataFrame, template: DeidTemplate) -> DataFrame:
     """T2 — record re-identification (BQReidentificationPipeline.java:160-261)."""
-    return _transform_df(df, template, forward=False, strategy=strategy)
+    return _transform_df(df, template, forward=False)
 
 
 def make_sql_udfs(spark, template: DeidTemplate) -> None:

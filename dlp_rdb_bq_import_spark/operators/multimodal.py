@@ -368,12 +368,6 @@ def extract_audio_features(
     )
 
 
-def frame_sample_plan(duration_ms: F.Column, every_ms: int = 1000) -> F.Column:
-    """Frame-sampling timestamps for a video payload: pure built-ins
-    (sequence), no decode needed to *plan* the sample."""
-    return F.sequence(F.lit(0), duration_ms, F.lit(every_ms))
-
-
 _FRAME_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

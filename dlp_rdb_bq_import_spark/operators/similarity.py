@@ -559,16 +559,6 @@ def sign_lsh_bands(
     )
 
 
-def sign_lsh_signatures(
-    df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id", bits: int = 16
-) -> DataFrame:
-    """Single b-bit sign signature per vector (one band) — kept as the
-    simple bucketing API; ``sign_lsh_bands`` is the recall-tunable form."""
-    return sign_lsh_bands(df, vec_col, id_col, bands=1, bits_per_band=bits).select(
-        F.col(id_col), F.col("val").alias("bucket")
-    )
-
-
 def lsh_topk(
     queries: DataFrame,
     corpus: DataFrame,

@@ -14,15 +14,19 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import time
 import uuid
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators import local_rows_df
 
 
-def _stream_scratch(prefix: str) -> str:
+@contextmanager
+def _stream_scratch(name: str):
     """Micro-batch scratch root (staged slices, versioned state, output
     appends, the stream's checkpoint): the fastest writable local dir.
 
@@ -30,15 +34,33 @@ def _stream_scratch(prefix: str) -> str:
     offset/commit-log and state-parquet writes here, and on a
     disk-backed /tmp those fsync-bound metadata writes are a measured
     ~10-15% of each streaming twin's wall (r15). The scratch is
-    per-run, deleted in the operator's ``finally`` — nothing crosses
-    runs. Deployment-parameterised via $SPARK_GRAFT_STREAM_SCRATCH
-    (point it at fast local NVMe on a cluster; per-key-scalar state
-    here is MB-scale, but a corpus whose state exceeds RAM needs a
-    disk-backed path)."""
+    per-call and removed when the block exits, on failure too (staging
+    included) — nothing crosses calls. Deployment-parameterised via
+    $SPARK_GRAFT_STREAM_SCRATCH (point it at fast local NVMe on a
+    cluster; per-key-scalar state here is MB-scale, but a corpus whose
+    state exceeds RAM needs a disk-backed path)."""
     base = os.environ.get("SPARK_GRAFT_STREAM_SCRATCH")
     if base is None and os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
         base = "/dev/shm"
-    return tempfile.mkdtemp(prefix=prefix, dir=base)
+    root = tempfile.mkdtemp(prefix=f"{name}_stream_", dir=base)
+    try:
+        yield root
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _normalize_ts(df: DataFrame) -> DataFrame:
+    """The events fixture's ``ts`` as TIMESTAMP, the conversion the
+    batch reader applies: TIMESTAMP(NANOS) stored as long becomes
+    micros, and NTZ is cast — watermarks/event-time ops require
+    TIMESTAMP, and parquet micros without a zone infer as NTZ. The cast
+    is linear under the session's pinned UTC zone, so event-time
+    semantics are exact."""
+    if dict(df.dtypes).get("ts") in ("bigint", "long"):
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if dict(df.dtypes).get("ts") == "timestamp_ntz":
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
 def _event_stream(spark: SparkSession, source_dir: str) -> DataFrame:
@@ -55,14 +77,7 @@ def _event_stream(spark: SparkSession, source_dir: str) -> DataFrame:
         )
     else:
         raw = spark.readStream.schema(schema).parquet(source_dir)
-    if dict(raw.dtypes).get("ts") in ("bigint", "long"):
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if dict(raw.dtypes).get("ts") == "timestamp_ntz":
-        # Watermarks/event-time ops require TIMESTAMP; parquet micros
-        # without a zone infer as NTZ. The cast is linear under the
-        # session's pinned UTC zone, so event-time semantics are exact.
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    return _normalize_ts(raw)
 
 
 class _VersionedState:
@@ -81,12 +96,12 @@ class _VersionedState:
     job-per-batch count drops. Superseded versions are deleted after
     the next one lands, so disk holds at most two generations."""
 
-    def __init__(self, root: str, name: str = "state") -> None:
-        self._root, self._name, self._v = root, name, 0
+    def __init__(self, root: str) -> None:
+        self._root, self._v = root, 0
 
     @property
     def current(self) -> str:
-        return os.path.join(self._root, f"{self._name}_v{self._v}")
+        return os.path.join(self._root, f"state_v{self._v}")
 
     @property
     def has_state(self) -> bool:
@@ -105,9 +120,9 @@ class _VersionedState:
     def write(self, df: DataFrame) -> None:
         """Materialize ``df`` as the next state generation (ONE job),
         then drop the generation before last."""
-        nxt = os.path.join(self._root, f"{self._name}_v{self._v + 1}")
+        nxt = os.path.join(self._root, f"state_v{self._v + 1}")
         df.write.mode("overwrite").parquet(nxt)
-        stale = os.path.join(self._root, f"{self._name}_v{self._v - 1}")
+        stale = os.path.join(self._root, f"state_v{self._v - 1}")
         self._v += 1
         if os.path.isdir(stale):
             shutil.rmtree(stale, ignore_errors=True)
@@ -128,8 +143,6 @@ def _stage_ordered_slices(
     shuffle), which every fold here is insensitive to by contract —
     each sorts per batch or folds order-free (the any-slicing ≡ batch
     guarantee)."""
-    import time as _time
-
     tmp = stage + "_tmp"
     (
         src.withColumn("_slice", slice_id.cast("int"))
@@ -139,7 +152,7 @@ def _stage_ordered_slices(
         .parquet(tmp)
     )
     os.makedirs(stage, exist_ok=True)
-    base_mtime = int(_time.time()) - 3600
+    base_mtime = int(time.time()) - 3600
     for i in range(n_slices):
         part_dir = os.path.join(tmp, f"_slice={i}")
         if not os.path.isdir(part_dir):
@@ -162,21 +175,217 @@ def _stage_ordered_slices(
     # the caller can hand this schema to readStream instead of paying a
     # footer-inference read of the freshly staged directory (r15). All-
     # nullable to match what parquet inference would have reported.
-    from pyspark.sql import types as T
-
     return T.StructType(
         [T.StructField(f.name, f.dataType, True) for f in src.schema.fields]
     )
 
 
-def _range_slice_id(col, cuts: list):
-    """Slice index for percentile-cut range slicing: the number of
-    cutpoints strictly below the value — EXACTLY the membership the
-    first-cut per-slice filters (``lo < x <= hi``) assigned."""
-    sid = F.lit(0)
-    for c in cuts:
-        sid = sid + F.when(col > F.lit(c), F.lit(1)).otherwise(F.lit(0))
-    return sid
+def _range_cuts(src: DataFrame, expr: str, n_slices: int) -> list:
+    """Exact percentile cutpoints of the SQL ``expr`` over ``src``: the
+    ``n_slices - 1`` values that split it into ``n_slices`` ordered,
+    non-overlapping ranges (none for one slice). ONE array-percentile
+    aggregate — N separate percentile() exprs would each buffer the
+    full column (the calibration_curve fix)."""
+    if n_slices <= 1:
+        return []
+    fracs = ", ".join(repr(i / n_slices) for i in range(1, n_slices))
+    return list(
+        src.select(F.expr(f"percentile({expr}, array({fracs}))").alias("_bs"))
+        .first()["_bs"]
+    )
+
+
+def _fold_stream(
+    spark: SparkSession,
+    name: str,
+    src: DataFrame,
+    make_fold,
+    slice_on: str | None = None,
+    n_slices: int = 1,
+    hash_slices: bool = False,
+    file_per_batch: bool = False,
+) -> DataFrame:
+    """The micro-batch driver every ``foreachBatch`` twin shares: stage
+    ``src`` as a parquet file stream under a per-call scratch root,
+    drive ``fold`` over it to completion, and return the eagerly
+    checkpointed ``readout()`` (the scratch is gone after the call).
+
+    ``make_fold(root)`` returns ``(fold, readout)``; both may keep state
+    or output under ``root``. With ``slice_on`` (a SQL expression over
+    ``src``) the input stages as ``n_slices`` ordered slices
+    (``_stage_ordered_slices``) — ranges at the expression's percentile
+    cuts, or hash buckets of it with ``hash_slices`` — replayed one file
+    per micro-batch, the event-time order a real queue provides per key;
+    ``file_per_batch`` asks the same of a plain staging. The scratch
+    root is removed on every exit, a failed staging included."""
+    sliced = slice_on is not None
+    if sliced and n_slices < 1:
+        raise ValueError(f"{name}: n_slices must be >= 1, got {n_slices}")
+    with _stream_scratch(name.removeprefix("streaming_")) as root:
+        stage = os.path.join(root, "staged")
+        if not sliced:
+            src.write.parquet(stage)
+            schema = src.schema
+        else:
+            by = F.expr(slice_on)
+            if hash_slices:
+                slice_id = F.pmod(F.xxhash64(by), F.lit(n_slices))
+            else:
+                # the number of cutpoints strictly below the value —
+                # EXACTLY the membership per-slice ``lo < x <= hi``
+                # filters assign
+                slice_id = F.lit(0)
+                for c in _range_cuts(src, slice_on, n_slices):
+                    slice_id = slice_id + F.when(by > F.lit(c), 1).otherwise(0)
+            schema = _stage_ordered_slices(src, stage, slice_id, n_slices)
+        fold, readout = make_fold(root)
+        reader = spark.readStream.schema(schema)
+        if sliced or file_per_batch:
+            reader = reader.option("maxFilesPerTrigger", 1)
+        q = (
+            reader.parquet(stage)
+            .writeStream.option("checkpointLocation", os.path.join(root, "_ckpt"))
+            .foreachBatch(fold)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return readout().localCheckpoint(eager=True)
+
+
+def _merge_fold(spark: SparkSession, build, merge):
+    """``make_fold`` for the mergeable-summary twins: the first
+    micro-batch's state is ``build(batch)``, every later one
+    ``merge(state, batch)`` — one state write per micro-batch, and the
+    final state is the result."""
+
+    def make_fold(root):
+        sd = _VersionedState(root)
+
+        def fold(batch_df, _epoch_id):
+            if sd.has_state:
+                sd.write(merge(spark.read.parquet(sd.current), batch_df))
+            else:
+                sd.write(build(batch_df))
+
+        return fold, lambda: spark.read.parquet(sd.current)
+
+    return make_fold
+
+
+def _append_fold(spark: SparkSession, step):
+    """``make_fold`` for the stateless twins: each micro-batch appends
+    ``step(batch)`` to one output directory, which is the result."""
+
+    def make_fold(root):
+        out_dir = os.path.join(root, "out")
+
+        def fold(batch_df, _epoch_id):
+            step(batch_df).write.mode("append").parquet(out_dir)
+
+        return fold, lambda: spark.read.parquet(out_dir)
+
+    return make_fold
+
+
+def _day_totals_fold(
+    spark: SparkSession, name: str, events: DataFrame, ts_col: str, value_col: str,
+    unit_scale: int, n_slices: int, readout,
+) -> DataFrame:
+    """The fold the day-grain twins (``streaming_ols_trend``,
+    ``streaming_max_drawdown``, ``streaming_mase``) share: the input
+    stages as ``n_slices`` day-range slices, and the carried state is
+    the DAY-GRAIN total table — one ``(day, Σ value)`` row per present
+    day, merged with each micro-batch's day totals by one full-outer
+    decimal join. Daily totals add, so the merge is exactly associative
+    for any slicing. ``readout(daily)`` runs once on the final state,
+    ``daily`` being ``(day, _x)`` with ``_x`` the day's total quantized
+    by ``unit_scale``."""
+    src = events.select(
+        F.date_trunc("day", F.col(ts_col).cast("timestamp"))
+        .cast("date")
+        .alias("day"),
+        F.col(value_col).cast("decimal(30,6)").alias("v"),
+    ).where(F.col("day").isNotNull() & F.col("v").isNotNull())
+    state_schema = "day date, sv decimal(38,6)"
+
+    def make_fold(root):
+        sd = _VersionedState(root)
+
+        def fold(batch_df, _epoch_id):
+            state = sd.read(spark, state_schema)
+            part = batch_df.groupBy("day").agg(
+                F.sum("v").cast("decimal(38,6)").alias("_bv")
+            )
+            merged = state.join(part, "day", "full").select(
+                "day",
+                (
+                    F.coalesce(F.col("sv"), F.lit(0).cast("decimal(38,6)"))
+                    + F.coalesce(F.col("_bv"), F.lit(0).cast("decimal(38,6)"))
+                )
+                .cast("decimal(38,6)")
+                .alias("sv"),
+            )
+            sd.write(merged)
+
+        def finish():
+            daily = sd.read(spark, state_schema).select(
+                "day",
+                F.round(F.col("sv").cast("double") * F.lit(unit_scale))
+                .cast("long")
+                .alias("_x"),
+            )
+            return readout(daily)
+
+        return fold, finish
+
+    return _fold_stream(
+        spark, name, src, make_fold, slice_on="unix_date(day)", n_slices=n_slices
+    )
+
+
+def _interval_join(
+    raw: DataFrame, left_type: str, right_type: str, within: str, watermark: str, how: str
+) -> DataFrame:
+    """Watermarked stream-stream interval join of the events stream:
+    each *left_type* event with the same user's *right_type* events
+    within ``within`` after it, as ``(user_id, left_event, right_event,
+    right_value)``. Columns are projected/renamed BEFORE the join
+    (stream-stream joins reject ambiguous attribute references after
+    the fact)."""
+    left = (
+        raw.where(F.col("event_type") == left_type)
+        .select(
+            F.col("user_id").alias("l_user"),
+            F.col("event_id").alias("left_event"),
+            F.col("ts").alias("l_ts"),
+        )
+        .withWatermark("l_ts", watermark)
+    )
+    right = (
+        raw.where(F.col("event_type") == right_type)
+        .select(
+            F.col("user_id").alias("r_user"),
+            F.col("event_id").alias("right_event"),
+            F.col("ts").alias("r_ts"),
+            F.col("value").alias("right_value"),
+        )
+        .withWatermark("r_ts", watermark)
+    )
+    return left.join(
+        right,
+        (F.col("l_user") == F.col("r_user"))
+        & (F.col("r_ts") >= F.col("l_ts"))
+        & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {within}")),
+        how,
+    ).select(
+        F.coalesce(F.col("l_user"), F.col("r_user")).alias("user_id"),
+        "left_event",
+        "right_event",
+        "right_value",
+    )
 
 
 def _run_to_memory(stream: DataFrame, output_mode: str) -> DataFrame:
@@ -269,8 +478,6 @@ def streaming_upsert(
     and a partitioned variant would swap only touched partitions.
     Blocks until the available data is processed (availableNow trigger).
     """
-    from pyspark.sql import Window
-
     from ..sinks.warehouse import replace_dir
 
     def apply_batch(batch_df, epoch_id):
@@ -362,32 +569,7 @@ def stream_stream_interval_join(
     ambiguous attribute references after the fact).
     """
     raw = _event_stream(spark, source_dir)
-    left = (
-        raw.where(F.col("event_type") == left_type)
-        .select(
-            F.col("user_id").alias("l_user"),
-            F.col("event_id").alias("left_event"),
-            F.col("ts").alias("l_ts"),
-        )
-        .withWatermark("l_ts", watermark)
-    )
-    right = (
-        raw.where(F.col("event_type") == right_type)
-        .select(
-            F.col("user_id").alias("user_id"),
-            F.col("event_id").alias("right_event"),
-            F.col("ts").alias("r_ts"),
-            F.col("value").alias("right_value"),
-        )
-        .withWatermark("r_ts", watermark)
-    )
-    joined = left.join(
-        right,
-        (F.col("l_user") == F.col("user_id"))
-        & (F.col("r_ts") >= F.col("l_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {within}")),
-        "inner",
-    ).select("user_id", "left_event", "right_event", "right_value")
+    joined = _interval_join(raw, left_type, right_type, within, watermark, "inner")
     return _run_to_memory(joined, "append")
 
 
@@ -419,68 +601,28 @@ def stream_stream_left_join(
     """
     import pandas as pd
 
-    batch = spark.read.parquet(source_dir)
-    if dict(batch.dtypes).get("ts") in ("bigint", "long"):
-        batch = batch.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if dict(batch.dtypes).get("ts") == "timestamp_ntz":
-        batch = batch.withColumn("ts", F.col("ts").cast("timestamp"))
+    batch = _normalize_ts(spark.read.parquet(source_dir))
     max_ts = batch.agg(F.max("ts")).first()[0]
     if max_ts is None:
         return local_rows_df(
             spark, [], "user_id long, left_event long, right_event long, right_value double"
         )
 
-    stage = os.path.join(_stream_scratch("left_join_stream_"), "staged")
     far = max_ts + pd.Timedelta(days=3650)
     sentinels = spark.createDataFrame(
         [(-1, far, -1, left_type, 0.0), (-2, far, -1, right_type, 0.0)],
         "event_id long, ts timestamp, user_id long, event_type string, value double",
     )
-    batch.select("event_id", "ts", "user_id", "event_type", "value").unionByName(
-        sentinels
-    ).write.parquet(stage)
-
-    raw = spark.readStream.schema(
-        spark.read.parquet(stage).schema
-    ).parquet(stage)
-    left = (
-        raw.where(F.col("event_type") == left_type)
-        .select(
-            F.col("user_id").alias("l_user"),
-            F.col("event_id").alias("left_event"),
-            F.col("ts").alias("l_ts"),
-        )
-        .withWatermark("l_ts", watermark)
-    )
-    right = (
-        raw.where(F.col("event_type") == right_type)
-        .select(
-            F.col("user_id").alias("r_user"),
-            F.col("event_id").alias("right_event"),
-            F.col("ts").alias("r_ts"),
-            F.col("value").alias("right_value"),
-        )
-        .withWatermark("r_ts", watermark)
-    )
-    joined = left.join(
-        right,
-        (F.col("l_user") == F.col("r_user"))
-        & (F.col("r_ts") >= F.col("l_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {within}")),
-        how,
-    ).select(
-        F.coalesce(F.col("l_user"), F.col("r_user")).alias("user_id"),
-        "left_event",
-        "right_event",
-        "right_value",
-    )
-    try:
+    # the memory sink holds the materialized result; the staged scratch
+    # (tmpfs) is dead weight once the stream drains
+    with _stream_scratch("left_join") as root:
+        stage = os.path.join(root, "staged")
+        batch.select("event_id", "ts", "user_id", "event_type", "value").unionByName(
+            sentinels
+        ).write.parquet(stage)
+        raw = spark.readStream.schema(spark.read.parquet(stage).schema).parquet(stage)
+        joined = _interval_join(raw, left_type, right_type, within, watermark, how)
         out = _run_to_memory(joined, "append")
-    finally:
-        # the memory sink holds the materialized result; the staged
-        # scratch (tmpfs) is dead weight after the stream drains (r15 —
-        # this operator previously leaked its per-run staging dir)
-        shutil.rmtree(os.path.dirname(stage), ignore_errors=True)
     return out.where(F.col("user_id") >= 0)
 
 
@@ -547,9 +689,7 @@ def stateful_sessionize(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    batch = spark.read.parquet(source_dir)
-    if dict(batch.dtypes).get("ts") in ("bigint", "long"):
-        batch = batch.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    batch = _normalize_ts(spark.read.parquet(source_dir))
     max_ts = batch.agg(F.max("ts")).first()[0]
     if max_ts is None:
         # Empty input: no sentinel timestamp to derive, and nothing to
@@ -561,18 +701,9 @@ def stateful_sessionize(
             "n_events long, first_event long",
         )
 
-    stage = os.path.join(
-        _stream_scratch("sessionize_stream_"), "staged"
-    )
     sentinel = spark.createDataFrame(
         [(-1, max_ts + pd.Timedelta(days=3650), -1)], "event_id long, ts timestamp, user_id long"
     )
-    # One flat parquet dir (file stream sources don't recurse); the
-    # sentinel lands in the same single micro-batch as the data, and the
-    # watermark jump after that batch fires every session's timeout in
-    # the engine's no-data batch.
-    batch.select("event_id", "ts", "user_id").unionByName(sentinel).write.parquet(stage)
-
     out_schema = (
         "user_id long, session_start timestamp, session_end timestamp, "
         "n_events long, first_event long"
@@ -621,27 +752,29 @@ def stateful_sessionize(
         state.update(tuple(int(v) for v in cur))
         state.setTimeoutTimestamp(cur[1] // 1000 + gap_seconds * 1000)
 
-    raw = _event_stream(spark, stage).select("event_id", "ts", "user_id")
-    stream = (
-        raw.withWatermark("ts", "0 seconds")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-        )
-    )
-    try:
-        result = _run_to_memory(stream, "append")
-        return (
-            result.where(F.col("user_id") >= 0)
-            .select(
-                "user_id",
-                F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-                "n_events",
-                "first_event",
+    with _stream_scratch("sessionize") as root:
+        stage = os.path.join(root, "staged")
+        # One flat parquet dir (file stream sources don't recurse); the
+        # sentinel lands in the same single micro-batch as the data, and
+        # the watermark jump after that batch fires every session's
+        # timeout in the engine's no-data batch.
+        staged = batch.select("event_id", "ts", "user_id").unionByName(sentinel)
+        staged.write.parquet(stage)
+        raw = _event_stream(spark, stage).select("event_id", "ts", "user_id")
+        stream = (
+            raw.withWatermark("ts", "0 seconds")
+            .groupBy("user_id")
+            .applyInPandasWithState(
+                fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
             )
         )
-    finally:
-        shutil.rmtree(os.path.dirname(stage), ignore_errors=True)
+        result = _run_to_memory(stream, "append")
+    return result.where(F.col("user_id") >= 0).select(
+        "user_id",
+        F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
+        "n_events",
+        "first_event",
+    )
 
 
 def streaming_incremental_neardup(
@@ -686,32 +819,19 @@ def streaming_incremental_neardup(
             f"corpus_signatures must carry mh_* columns with k a multiple of "
             f"bands; got k={k}, bands={bands}"
         )
-    root = _stream_scratch("neardup_stream_")
-    stage = os.path.join(root, "staged")
-    out_dir = os.path.join(root, "flagged")
     src = new_docs.select(F.col(id_col).cast("long").alias(id_col), text_col)
-    src.write.parquet(stage)
     corpus_signatures = corpus_signatures.localCheckpoint(eager=True)
 
-    def flag_batch(batch_df, _epoch_id):
-        dedup_ops.incremental_minhash_pairs(
+    def flag_batch(batch_df):
+        return dedup_ops.incremental_minhash_pairs(
             batch_df, corpus_signatures, text_col, id_col,
             threshold=threshold, bands=bands,
             shingle_n=shingle_n, shingle_unit=shingle_unit,
-        ).write.mode("append").parquet(out_dir)
+        )
 
-    try:
-        raw = spark.readStream.schema(src.schema).parquet(stage)
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(flag_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.read.parquet(out_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return _fold_stream(
+        spark, "streaming_incremental_neardup", src, _append_fold(spark, flag_batch)
+    )
 
 
 def streaming_decontam(
@@ -747,33 +867,18 @@ def streaming_decontam(
             f"bench_index must be a bench_gram_index result; got "
             f"{bench_index.columns}"
         )
-    root = _stream_scratch("decontam_stream_")
-    stage = os.path.join(root, "staged")
-    out_dir = os.path.join(root, "flagged")
     src = new_docs.select(F.col(id_col).cast("long").alias(id_col), text_col)
-    src.write.parquet(stage)
     bench_index = bench_index.localCheckpoint(eager=True)
     # Bloom sizing paid ONCE for the static index, not per micro-batch
     index_rows = bench_index.count()
 
-    def flag_batch(batch_df, _epoch_id):
-        decontam_ops.incremental_contamination_pairs(
+    def flag_batch(batch_df):
+        return decontam_ops.incremental_contamination_pairs(
             batch_df, bench_index, text_col, id_col, n=n, min_hits=min_hits,
             unit=unit, index_size_hint=index_rows,
-        ).write.mode("append").parquet(out_dir)
+        )
 
-    try:
-        raw = spark.readStream.schema(src.schema).parquet(stage)
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(flag_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.read.parquet(out_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return _fold_stream(spark, "streaming_decontam", src, _append_fold(spark, flag_batch))
 
 
 def streaming_curation(
@@ -831,15 +936,10 @@ def streaming_curation(
     ):
         if not cols <= set(d.columns):
             raise ValueError(f"{need} must carry {sorted(cols)}; got {d.columns}")
-    root = _stream_scratch("curation_stream_")
-    stage = os.path.join(root, "staged")
-    out_dir = os.path.join(root, "survivors")
-    fp_dir = os.path.join(root, "admitted_fingerprints")
     src = new_docs.select(
         F.col(id_col).cast("long").alias(id_col),
         *[c for c in new_docs.columns if c != id_col],
     )
-    src.write.parquet(stage)
     seen = corpus_fingerprints.select("fingerprint").distinct().localCheckpoint(
         eager=True
     )
@@ -848,62 +948,55 @@ def streaming_curation(
     # Bloom sizing paid ONCE for the static index, not per micro-batch
     index_rows = bench_index.count()
 
-    def curate_batch(batch_df, _epoch_id):
-        fresh = dedup_ops.content_fingerprint(batch_df, [text_col])
-        keep = fresh.groupBy("fingerprint").agg(F.min(id_col).alias(id_col))
-        blocked = seen
-        if os.path.isdir(fp_dir):  # earlier micro-batches' admissions
-            blocked = blocked.unionByName(spark.read.parquet(fp_dir))
-        # checkpoint the exact-stage output once: it feeds the
-        # fingerprint append AND the three later consumers
-        admitted = (
-            fresh.join(keep, ["fingerprint", id_col], "left_semi")
-            .join(blocked, "fingerprint", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        # record at the EXACT stage, not post-screen: a doc dropped by
-        # a later stage must still block future identical arrivals
-        # (matching the batch path, where within-batch dedup runs
-        # before any screening)
-        admitted.select("fingerprint").write.mode("append").parquet(fp_dir)
-        survivors = admitted.drop("fingerprint")
-        near = (
-            dedup_ops.incremental_minhash_pairs(
-                survivors, corpus_signatures, text_col, id_col,
-                threshold=threshold, bands=bands,
-                shingle_n=shingle_n, shingle_unit=shingle_unit,
-            )
-            .select(F.col("new_id").alias(id_col))
-            .distinct()
-        )
-        survivors = survivors.join(near, id_col, "left_anti")
-        survivors = decontam_ops.decontaminate_incremental(
-            survivors, bench_index, text_col, id_col,
-            n=gram_n, unit=gram_unit, min_hits=min_hits,
-            index_size_hint=index_rows,
-        )
-        survivors.write.mode("append").parquet(out_dir)
+    def make_fold(root):
+        out_dir = os.path.join(root, "survivors")
+        fp_dir = os.path.join(root, "admitted_fingerprints")
 
-    try:
-        # one file per trigger: the staged parquet's partition files
-        # become real successive micro-batches, so the cross-batch
-        # fingerprint accumulation is genuinely exercised, not a
-        # single-batch degenerate case
-        raw = (
-            spark.readStream.schema(src.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(curate_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.read.parquet(out_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        def curate_batch(batch_df, _epoch_id):
+            fresh = dedup_ops.content_fingerprint(batch_df, [text_col])
+            keep = fresh.groupBy("fingerprint").agg(F.min(id_col).alias(id_col))
+            blocked = seen
+            if os.path.isdir(fp_dir):  # earlier micro-batches' admissions
+                blocked = blocked.unionByName(spark.read.parquet(fp_dir))
+            # checkpoint the exact-stage output once: it feeds the
+            # fingerprint append AND the three later consumers
+            admitted = (
+                fresh.join(keep, ["fingerprint", id_col], "left_semi")
+                .join(blocked, "fingerprint", "left_anti")
+                .localCheckpoint(eager=True)
+            )
+            # record at the EXACT stage, not post-screen: a doc dropped by
+            # a later stage must still block future identical arrivals
+            # (matching the batch path, where within-batch dedup runs
+            # before any screening)
+            admitted.select("fingerprint").write.mode("append").parquet(fp_dir)
+            survivors = admitted.drop("fingerprint")
+            near = (
+                dedup_ops.incremental_minhash_pairs(
+                    survivors, corpus_signatures, text_col, id_col,
+                    threshold=threshold, bands=bands,
+                    shingle_n=shingle_n, shingle_unit=shingle_unit,
+                )
+                .select(F.col("new_id").alias(id_col))
+                .distinct()
+            )
+            survivors = survivors.join(near, id_col, "left_anti")
+            survivors = decontam_ops.decontaminate_incremental(
+                survivors, bench_index, text_col, id_col,
+                n=gram_n, unit=gram_unit, min_hits=min_hits,
+                index_size_hint=index_rows,
+            )
+            survivors.write.mode("append").parquet(out_dir)
+
+        return curate_batch, lambda: spark.read.parquet(out_dir)
+
+    # one file per trigger: the staged parquet's partition files become
+    # real successive micro-batches, so the cross-batch fingerprint
+    # accumulation is genuinely exercised, not a single-batch
+    # degenerate case
+    return _fold_stream(
+        spark, "streaming_curation", src, make_fold, file_per_batch=True
+    )
 
 
 def streaming_dedup_events(
@@ -921,15 +1014,12 @@ def streaming_dedup_events(
     event regardless of delivery count.
     """
     batch = spark.read.parquet(source_dir).select(key, "user_id", "event_type")
-    stage = os.path.join(_stream_scratch("dedup_stream_"), "staged")
-    for _ in range(replays):
-        batch.write.parquet(stage, mode="append")
-    try:
+    with _stream_scratch("dedup") as root:
+        stage = os.path.join(root, "staged")
+        for _ in range(replays):
+            batch.write.parquet(stage, mode="append")
         raw = spark.readStream.schema(batch.schema).parquet(stage)
-        deduped = raw.dropDuplicates([key])
-        return _run_to_memory(deduped, "append")
-    finally:
-        shutil.rmtree(os.path.dirname(stage), ignore_errors=True)
+        return _run_to_memory(raw.dropDuplicates([key]), "append")
 
 
 def streaming_url_frontier(
@@ -965,63 +1055,47 @@ def streaming_url_frontier(
 
     Returns all scheduled fetches: (id_col, canon, host, rk, batch).
     """
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from ..operators import urls as url_ops
 
     if "canon" not in seen.columns:
         raise ValueError(f"seen must carry a 'canon' column; got {seen.columns}")
-    root = _stream_scratch("frontier_stream_")
-    stage = _os.path.join(root, "staged")
-    out_dir = _os.path.join(root, "scheduled")
-    emitted_dir = _os.path.join(root, "emitted_canon")
-    pending_dir = _os.path.join(root, "pending")
     src = discovered.select(
         F.col(id_col).cast("long").alias(id_col), F.col(url_col).alias(url_col)
     )
-    src.write.parquet(stage)
     seen0 = seen.select("canon").distinct().localCheckpoint(eager=True)
 
-    def schedule_batch(batch_df, epoch_id):
-        cand = batch_df
-        if _os.path.isdir(pending_dir):
-            cand = cand.unionByName(spark.read.parquet(pending_dir))
-        blocked = seen0
-        if _os.path.isdir(emitted_dir):
-            blocked = blocked.unionByName(spark.read.parquet(emitted_dir))
-        fresh = url_ops.frontier_next_batch(
-            cand, blocked, url_col, id_col,
-            per_host_cap=per_host_cap, keep_overflow=True,
-        ).localCheckpoint(eager=True)  # eager: pending is overwritten below
-        sched = fresh.where(F.col("rk") <= per_host_cap)
-        sched.select("canon").write.mode("append").parquet(emitted_dir)
-        sched.withColumn("batch", F.lit(int(epoch_id)).cast("long")).write.mode(
-            "append"
-        ).parquet(out_dir)
-        # over-cap backlog re-queues: canon doubles as the next round's
-        # url (canonicalization is idempotent)
-        fresh.where(F.col("rk") > per_host_cap).select(
-            F.col(id_col), F.col("canon").alias(url_col)
-        ).write.mode("overwrite").parquet(pending_dir)
+    def make_fold(root):
+        out_dir = os.path.join(root, "scheduled")
+        emitted_dir = os.path.join(root, "emitted_canon")
+        pending_dir = os.path.join(root, "pending")
 
-    try:
-        raw = (
-            spark.readStream.schema(src.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(schedule_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.read.parquet(out_dir).localCheckpoint(eager=True)
-    finally:
-        _shutil.rmtree(root, ignore_errors=True)
+        def schedule_batch(batch_df, epoch_id):
+            cand = batch_df
+            if os.path.isdir(pending_dir):
+                cand = cand.unionByName(spark.read.parquet(pending_dir))
+            blocked = seen0
+            if os.path.isdir(emitted_dir):
+                blocked = blocked.unionByName(spark.read.parquet(emitted_dir))
+            fresh = url_ops.frontier_next_batch(
+                cand, blocked, url_col, id_col,
+                per_host_cap=per_host_cap, keep_overflow=True,
+            ).localCheckpoint(eager=True)  # eager: pending is overwritten below
+            sched = fresh.where(F.col("rk") <= per_host_cap)
+            sched.select("canon").write.mode("append").parquet(emitted_dir)
+            sched.withColumn("batch", F.lit(int(epoch_id)).cast("long")).write.mode(
+                "append"
+            ).parquet(out_dir)
+            # over-cap backlog re-queues: canon doubles as the next round's
+            # url (canonicalization is idempotent)
+            fresh.where(F.col("rk") > per_host_cap).select(
+                F.col(id_col), F.col("canon").alias(url_col)
+            ).write.mode("overwrite").parquet(pending_dir)
+
+        return schedule_batch, lambda: spark.read.parquet(out_dir)
+
+    return _fold_stream(
+        spark, "streaming_url_frontier", src, make_fold, file_per_batch=True
+    )
 
 
 def streaming_cms(
@@ -1045,33 +1119,15 @@ def streaming_cms(
     """
     from ..operators import profiling as prof
 
-    root = _stream_scratch("cms_stream_")
-    stage = os.path.join(root, "staged")
     src = values.select(F.col(col).cast("string").alias(col))
-    src.write.parquet(stage)
-    sd = _VersionedState(root, "sketch")
 
-    def fold_batch(batch_df, _epoch_id):
-        batch_sketch = prof.cms_build(batch_df, col, depth=depth, width=width)
-        if sd.has_state:
-            prev = spark.read.parquet(sd.current)
-            merged = prof.merge_cms(prev, batch_sketch)
-        else:
-            merged = batch_sketch
-        sd.write(merged)
+    def build(batch_df):
+        return prof.cms_build(batch_df, col, depth=depth, width=width)
 
-    try:
-        raw = spark.readStream.schema(src.schema).parquet(stage)
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(fold_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.read.parquet(sd.current).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    def merge(prev, batch_df):
+        return prof.merge_cms(prev, build(batch_df))
+
+    return _fold_stream(spark, "streaming_cms", src, _merge_fold(spark, build, merge))
 
 
 def streaming_anchor_index(
@@ -1099,35 +1155,18 @@ def streaming_anchor_index(
     from ..operators.html_extract import extract_links_with_text
     from ..operators.urls import anchor_text_index, merge_anchor_index
 
-    root = _stream_scratch("anchor_stream_")
-    stage = os.path.join(root, "staged")
     src = pages.select(F.col(id_col), F.col(html_col))
-    src.write.parquet(stage)
-    sd = _VersionedState(root, "index")
 
-    def fold_batch(batch_df, _epoch_id):
-        batch_index = anchor_text_index(
+    def build(batch_df):
+        return anchor_text_index(
             extract_links_with_text(batch_df, html_col, id_col), id_col
         )
-        if sd.has_state:
-            prev = spark.read.parquet(sd.current)
-            merged = merge_anchor_index(prev, batch_index)
-        else:
-            merged = batch_index
-        sd.write(merged)
 
-    try:
-        raw = spark.readStream.schema(src.schema).parquet(stage)
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(fold_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.read.parquet(sd.current).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    def merge(prev, batch_df):
+        return merge_anchor_index(prev, build(batch_df))
+
+    fold = _merge_fold(spark, build, merge)
+    return _fold_stream(spark, "streaming_anchor_index", src, fold)
 
 
 def streaming_bottomk(
@@ -1150,33 +1189,13 @@ def streaming_bottomk(
     estimator."""
     from ..operators import sampling as samp
 
-    root = _stream_scratch("bottomk_stream_")
-    stage = os.path.join(root, "staged")
-    src = values
-    src.write.parquet(stage)
-    sd = _VersionedState(root, "sample")
+    def build(batch_df):
+        return samp.bottomk_sample(batch_df, key_col, k)
 
-    def fold_batch(batch_df, _epoch_id):
-        batch_k = samp.bottomk_sample(batch_df, key_col, k)
-        if sd.has_state:
-            prev = spark.read.parquet(sd.current)
-            merged = samp.merge_bottomk(prev, batch_k, key_col, k)
-        else:
-            merged = batch_k
-        sd.write(merged)
+    def merge(prev, batch_df):
+        return samp.merge_bottomk(prev, build(batch_df), key_col, k)
 
-    try:
-        raw = spark.readStream.schema(src.schema).parquet(stage)
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(fold_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.read.parquet(sd.current).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return _fold_stream(spark, "streaming_bottomk", values, _merge_fold(spark, build, merge))
 
 
 def streaming_linkage_probe(
@@ -1215,39 +1234,26 @@ def streaming_linkage_probe(
             f"variant_index must be a fastss_variant_index result; got "
             f"{variant_index.columns}"
         )
-    root = _stream_scratch("linkage_stream_")
-    stage = os.path.join(root, "staged")
-    out_dir = os.path.join(root, "verified")
     src = new_records.select(
         F.col(id_col).cast("long").alias(id_col), text_col
     )
-    src.write.parquet(stage)
     variant_index = variant_index.localCheckpoint(eager=True)
     corpus_names = corpus.select(
         F.col(id_col).cast("long").alias(id_col), text_col
     ).localCheckpoint(eager=True)
 
-    def probe_batch(batch_df, _epoch_id):
+    def probe_batch(batch_df):
         cand = dedup_ops.probe_variant_index(
             batch_df, variant_index, text_col, id_col
         )
         names = corpus_names.unionByName(batch_df.select(id_col, text_col))
-        dedup_ops.verify_edit_distance(
+        return dedup_ops.verify_edit_distance(
             cand, names, text_col, id_col, max_dist=max_dist
-        ).write.mode("append").parquet(out_dir)
+        )
 
-    try:
-        raw = spark.readStream.schema(src.schema).parquet(stage)
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(probe_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.read.parquet(out_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return _fold_stream(
+        spark, "streaming_linkage_probe", src, _append_fold(spark, probe_batch)
+    )
 
 
 def streaming_ewma(
@@ -1286,123 +1292,91 @@ def streaming_ewma(
     ewma rounded to 9."""
     if not 0.0 < alpha < 1.0:
         raise ValueError(f"streaming_ewma: alpha must be in (0,1), got {alpha}")
-    if n_slices < 1:
-        raise ValueError(f"streaming_ewma: n_slices must be >= 1, got {n_slices}")
     import pandas as pd
-
-    root = _stream_scratch("ewma_stream_")
-    stage = os.path.join(root, "staged")
-    out_dir = os.path.join(root, "out")
-    os.makedirs(stage)
 
     src = events.select(
         F.col(key_col).alias("k"),
         F.col(ts_col).alias("ts"),
-        # NTZ-safe epoch seconds for range slicing (NTZ has no direct
-        # BIGINT cast; the TIMESTAMP hop only shifts by a constant tz
-        # offset, which cannot reorder anything)
-        F.col(ts_col).cast("timestamp").cast("long").alias("tsl"),
         F.col(id_col).cast("long").alias("eid"),
         F.col(value_col).cast("double").alias("x"),
     ).where(F.col("x").isNotNull() & F.col("ts").isNotNull())
-    # slice by ntile-free ts range cutpoints: exact percentiles of the
-    # epoch seconds give n_slices non-overlapping, ordered segments.
-    # ONE array-percentile aggregate — N separate percentile() exprs
-    # would each buffer the full column (the calibration_curve fix)
-    if n_slices > 1:
-        fracs = ", ".join(repr(i / n_slices) for i in range(1, n_slices))
-        cuts = list(
-            src.select(
-                F.expr(f"percentile(tsl, array({fracs}))").alias("_bs")
-            ).first()["_bs"]
-        )
-    else:
-        cuts = []
-    # one-pass ordered staging (mtime-pinned slices, see the helper)
-    staged_schema = _stage_ordered_slices(
-        src, stage, _range_slice_id(F.col("tsl"), cuts), n_slices
-    )
 
     state_schema = "k string, ewma double"
     out_schema = "k string, ts timestamp, eid long, x double, ewma double"
-    sd = _VersionedState(root)
 
-    def fold_batch(batch_df, _epoch_id):
-        state = sd.read(spark, state_schema)
-        seeded = batch_df.drop("tsl").join(
-            state.withColumnRenamed("ewma", "_seed"), "k", "left"
-        )
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(["ts", "eid"])
+        seed = pdf["_seed"].iloc[0]
+        e = None if pd.isna(seed) else float(seed)
+        out = []
+        for x in pdf["x"].tolist():
+            e = float(x) if e is None else alpha * float(x) + (1.0 - alpha) * e
+            out.append(e)
+        pdf = pdf.drop(columns=["_seed"]).copy()
+        pdf["ewma"] = out
+        return pdf
 
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(["ts", "eid"])
-            seed = pdf["_seed"].iloc[0]
-            e = None if pd.isna(seed) else float(seed)
-            out = []
-            for x in pdf["x"].tolist():
-                e = float(x) if e is None else alpha * float(x) + (1.0 - alpha) * e
-                out.append(e)
-            pdf = pdf.drop(columns=["_seed"]).copy()
-            pdf["ewma"] = out
-            return pdf
+    def make_fold(root):
+        out_dir = os.path.join(root, "out")
+        sd = _VersionedState(root)
 
-        # folded is consumed twice (output append + last-EWMA state).
-        # The fold runs ONCE inside the append-write job; the state
-        # job then derives from the parquet bytes that write just
-        # produced (the batch's new files, isolated by a directory
-        # diff) — no eager checkpoint job, no second applyInPandas
-        # execution. (A persist() variant measured 6.2s -> 10.9s in
-        # the r14 profiler — building the columnar InMemoryRelation
-        # per batch costs more than the job it saves; reading back
-        # the just-written files costs only a footer read.)
-        folded = seeded.groupBy("k").applyInPandas(fn, out_schema)
-        before = (
-            set(os.listdir(out_dir)) if os.path.isdir(out_dir) else set()
-        )
-        folded.write.mode("append").parquet(out_dir)
-        new_files = [
-            os.path.join(out_dir, f)
-            for f in sorted(set(os.listdir(out_dir)) - before)
-            if f.endswith(".parquet")
-        ]
-        batch_out = (
-            spark.read.schema(out_schema).parquet(*new_files)
-            if new_files
-            else local_rows_df(spark, [], out_schema)
-        )
-        last = batch_out.groupBy("k").agg(
-            F.max_by("ewma", F.struct("ts", "eid")).alias("ewma")
-        )
-        new_state = state.join(last.select("k"), "k", "left_anti").unionByName(
-            last
-        )
-        sd.write(new_state)
+        def fold_batch(batch_df, _epoch_id):
+            state = sd.read(spark, state_schema)
+            seeded = batch_df.join(
+                state.withColumnRenamed("ewma", "_seed"), "k", "left"
+            )
+            # folded is consumed twice (output append + last-EWMA state).
+            # The fold runs ONCE inside the append-write job; the state
+            # job then derives from the parquet bytes that write just
+            # produced (the batch's new files, isolated by a directory
+            # diff) — no eager checkpoint job, no second applyInPandas
+            # execution. (A persist() variant measured 6.2s -> 10.9s in
+            # the r14 profiler — building the columnar InMemoryRelation
+            # per batch costs more than the job it saves; reading back
+            # the just-written files costs only a footer read.)
+            folded = seeded.groupBy("k").applyInPandas(fn, out_schema)
+            before = (
+                set(os.listdir(out_dir)) if os.path.isdir(out_dir) else set()
+            )
+            folded.write.mode("append").parquet(out_dir)
+            new_files = [
+                os.path.join(out_dir, f)
+                for f in sorted(set(os.listdir(out_dir)) - before)
+                if f.endswith(".parquet")
+            ]
+            batch_out = (
+                spark.read.schema(out_schema).parquet(*new_files)
+                if new_files
+                else local_rows_df(spark, [], out_schema)
+            )
+            last = batch_out.groupBy("k").agg(
+                F.max_by("ewma", F.struct("ts", "eid")).alias("ewma")
+            )
+            new_state = state.join(last.select("k"), "k", "left_anti").unionByName(
+                last
+            )
+            sd.write(new_state)
 
-    try:
-        raw = (
-            spark.readStream.schema(staged_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(fold_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return (
-            spark.read.parquet(out_dir)
-            .select(
+        def readout():
+            return spark.read.parquet(out_dir).select(
                 F.col("k").alias(key_col),
                 F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias(ts_col),
                 F.col("eid").alias(id_col),
                 F.col("x").alias(value_col),
                 F.round("ewma", 9).alias("ewma"),
             )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+        return fold_batch, readout
+
+    # slice by ntile-free ts range cutpoints: exact percentiles of the
+    # epoch seconds give n_slices non-overlapping, ordered segments. The
+    # seconds are NTZ-safe: NTZ has no direct BIGINT cast, and the
+    # TIMESTAMP hop only shifts by a constant tz offset, which cannot
+    # reorder anything
+    tsl = "CAST(CAST(ts AS TIMESTAMP) AS BIGINT)"
+    return _fold_stream(
+        spark, "streaming_ewma", src, make_fold, slice_on=tsl, n_slices=n_slices
+    )
 
 
 def streaming_quantile_digest(
@@ -1431,46 +1405,21 @@ def streaming_quantile_digest(
     from ..operators.rollup import digest_merge, quantile_digest
 
     keys = group_cols or []
-    root = _stream_scratch("qdigest_stream_")
-    stage = os.path.join(root, "staged")
-    os.makedirs(stage)
     src = values.select(
         *keys, F.col(value_col).cast("double").alias("_v")
     ).where(F.col("_v").isNotNull())
-    staged_schema = _stage_ordered_slices(
-        src, stage, F.pmod(F.xxhash64("_v"), F.lit(n_slices)), n_slices
+
+    def build(batch_df):
+        return quantile_digest(batch_df, "_v", k=k, group_cols=keys or None)
+
+    def merge(prev, batch_df):
+        return digest_merge(prev, build(batch_df), group_cols=keys or None, k=k)
+
+    fold = _merge_fold(spark, build, merge)
+    return _fold_stream(
+        spark, "streaming_quantile_digest", src, fold,
+        slice_on="_v", n_slices=n_slices, hash_slices=True,
     )
-    sd = _VersionedState(root, "digest")
-
-    def fold_batch(batch_df, _epoch_id):
-        batch_digest = quantile_digest(
-            batch_df, "_v", k=k, group_cols=keys or None
-        )
-        if sd.has_state:
-            prev = spark.read.parquet(sd.current)
-            merged = digest_merge(
-                prev, batch_digest, group_cols=keys or None, k=k
-            )
-        else:
-            merged = batch_digest
-        sd.write(merged)
-
-    try:
-        raw = (
-            spark.readStream.schema(src.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stage)
-        )
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(fold_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.read.parquet(sd.current).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def streaming_skyline(
@@ -1493,36 +1442,15 @@ def streaming_skyline(
     contract, like every fold in this module)."""
     from ..operators.sampling import skyline
 
-    root = _stream_scratch("skyline_stream_")
-    stage = os.path.join(root, "staged")
-    rows.write.parquet(stage)
-    sd = _VersionedState(root, "skyline")
+    def build(batch_df):
+        return skyline(batch_df, minimize=minimize, maximize=maximize)
 
-    def fold_batch(batch_df, _epoch_id):
-        batch_sky = skyline(batch_df, minimize=minimize, maximize=maximize)
-        if sd.has_state:
-            prev = spark.read.parquet(sd.current)
-            merged = skyline(
-                prev.unionByName(batch_sky),
-                minimize=minimize,
-                maximize=maximize,
-            )
-        else:
-            merged = batch_sky
-        sd.write(merged)
+    def merge(prev, batch_df):
+        return skyline(
+            prev.unionByName(build(batch_df)), minimize=minimize, maximize=maximize
+        )
 
-    try:
-        raw = spark.readStream.schema(rows.schema).parquet(stage)
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(fold_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.read.parquet(sd.current).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return _fold_stream(spark, "streaming_skyline", rows, _merge_fold(spark, build, merge))
 
 
 def streaming_connected_components(
@@ -1545,38 +1473,21 @@ def streaming_connected_components(
     edges, never the full history."""
     from ..operators.graph import connected_components
 
-    root = _stream_scratch("cc_stream_")
-    stage = os.path.join(root, "staged")
     src = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     )
-    src.write.parquet(stage)
-    sd = _VersionedState(root, "components")
 
-    def fold_batch(batch_df, _epoch_id):
-        b = batch_df.select("src", "dst")
-        if sd.has_state:
-            prev = spark.read.parquet(sd.current)
-            star = prev.where(F.col("node") != F.col("component")).select(
-                F.col("component").alias("src"), F.col("node").alias("dst")
-            )
-            merged = connected_components(star.unionByName(b))
-        else:
-            merged = connected_components(b)
-        sd.write(merged)
+    def build(batch_df):
+        return connected_components(batch_df.select("src", "dst"))
 
-    try:
-        raw = spark.readStream.schema(src.schema).parquet(stage)
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(fold_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.read.parquet(sd.current).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    def merge(prev, batch_df):
+        star = prev.where(F.col("node") != F.col("component")).select(
+            F.col("component").alias("src"), F.col("node").alias("dst")
+        )
+        return connected_components(star.unionByName(batch_df.select("src", "dst")))
+
+    fold = _merge_fold(spark, build, merge)
+    return _fold_stream(spark, "streaming_connected_components", src, fold)
 
 
 def streaming_twap(
@@ -1610,13 +1521,6 @@ def streaming_twap(
     on per-key pandas dispatch; this shape is ~5×). Output one row
     per key: ``(key, n_events (long), span_seconds (long), twap
     (double))`` — the batch operator's exact schema."""
-    if n_slices < 1:
-        raise ValueError(f"streaming_twap: n_slices must be >= 1, got {n_slices}")
-
-    root = _stream_scratch("twap_stream_")
-    stage = os.path.join(root, "staged")
-    os.makedirs(stage)
-
     src = events.select(
         F.col(key_col).cast("string").alias("k"),
         F.unix_micros(F.col(ts_col).cast("timestamp")).alias("t"),
@@ -1626,100 +1530,73 @@ def streaming_twap(
     ).where(
         F.col("k").isNotNull() & F.col("t").isNotNull() & F.col("v").isNotNull()
     )
-    if n_slices > 1:
-        fracs = ", ".join(repr(i / n_slices) for i in range(1, n_slices))
-        cuts = list(
-            src.select(
-                F.expr(f"percentile(t, array({fracs}))").alias("_bs")
-            ).first()["_bs"]
-        )
-    else:
-        cuts = []
-    staged_schema = _stage_ordered_slices(
-        src, stage, _range_slice_id(F.col("t"), cuts), n_slices
-    )
-
     state_schema = (
         "k string, n long, last_t long, last_v long, "
         "acc_vt decimal(38,0), acc_dt long"
     )
     dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    sd = _VersionedState(root)
 
-    def fold_batch(batch_df, _epoch_id):
-        from pyspark.sql import Window
+    def make_fold(root):
+        sd = _VersionedState(root)
 
-        state = sd.read(spark, state_schema)
-        # per-key batch partials, all JVM-side: one lead window + one
-        # groupBy (the batch operator's own shape, scoped to the batch)
-        # tie-breaker MUST be (t, v) — the batch operator and the shared
-        # _TWAP_SQL oracle both order the lead window by (t, v); on
-        # same-microsecond events the LAST in that order carries the
-        # bridging duration, so any other tie order silently diverges
-        w = Window.partitionBy("k").orderBy(F.col("t").asc(), F.col("v").asc())
-        order = F.struct(F.col("t"), F.col("v"))
-        stepped = batch_df.withColumn("_nt", F.lead("t").over(w))
-        part = stepped.groupBy("k").agg(
-            F.count(F.lit(1)).cast("long").alias("_bn"),
-            F.min_by(F.col("t"), order).alias("_bft"),
-            F.max_by(F.col("t"), order).alias("_blt"),
-            F.max_by(F.col("v"), order).alias("_blv"),
-            F.coalesce(
-                F.sum(dec("v") * (F.col("_nt") - F.col("t")).cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("_bvt"),
-            F.coalesce(F.sum(F.col("_nt") - F.col("t")), F.lit(0))
-            .cast("long")
-            .alias("_bdt"),
-        )
-        # merge: the carried last observation bridges to the batch's
-        # first (state precedes the batch — event-time-ordered slices)
-        joined = state.join(part, "k", "full")
-        bridge = F.when(
-            F.col("last_t").isNotNull() & F.col("_bft").isNotNull(),
-            F.col("_bft") - F.col("last_t"),
-        ).otherwise(F.lit(0)).cast("long")
-        new_state = joined.select(
-            "k",
-            (F.coalesce(F.col("n"), F.lit(0)) + F.coalesce(F.col("_bn"), F.lit(0)))
-            .cast("long")
-            .alias("n"),
-            F.coalesce(F.col("_blt"), F.col("last_t")).alias("last_t"),
-            F.coalesce(F.col("_blv"), F.col("last_v")).alias("last_v"),
-            (
-                F.coalesce(dec("acc_vt"), F.lit(0).cast("decimal(38,0)"))
-                + F.coalesce(dec("_bvt"), F.lit(0).cast("decimal(38,0)"))
-                + F.coalesce(dec("last_v"), F.lit(0).cast("decimal(38,0)"))
-                * bridge.cast("decimal(38,0)")
+        def fold_batch(batch_df, _epoch_id):
+            state = sd.read(spark, state_schema)
+            # per-key batch partials, all JVM-side: one lead window + one
+            # groupBy (the batch operator's own shape, scoped to the batch)
+            # tie-breaker MUST be (t, v) — the batch operator and the shared
+            # _TWAP_SQL oracle both order the lead window by (t, v); on
+            # same-microsecond events the LAST in that order carries the
+            # bridging duration, so any other tie order silently diverges
+            w = Window.partitionBy("k").orderBy(F.col("t").asc(), F.col("v").asc())
+            order = F.struct(F.col("t"), F.col("v"))
+            stepped = batch_df.withColumn("_nt", F.lead("t").over(w))
+            part = stepped.groupBy("k").agg(
+                F.count(F.lit(1)).cast("long").alias("_bn"),
+                F.min_by(F.col("t"), order).alias("_bft"),
+                F.max_by(F.col("t"), order).alias("_blt"),
+                F.max_by(F.col("v"), order).alias("_blv"),
+                F.coalesce(
+                    F.sum(dec("v") * (F.col("_nt") - F.col("t")).cast("decimal(38,0)")),
+                    F.lit(0).cast("decimal(38,0)"),
+                ).alias("_bvt"),
+                F.coalesce(F.sum(F.col("_nt") - F.col("t")), F.lit(0))
+                .cast("long")
+                .alias("_bdt"),
             )
-            .cast("decimal(38,0)")
-            .alias("acc_vt"),
-            (
-                F.coalesce(F.col("acc_dt"), F.lit(0))
-                + F.coalesce(F.col("_bdt"), F.lit(0))
-                + bridge
+            # merge: the carried last observation bridges to the batch's
+            # first (state precedes the batch — event-time-ordered slices)
+            joined = state.join(part, "k", "full")
+            bridge = F.when(
+                F.col("last_t").isNotNull() & F.col("_bft").isNotNull(),
+                F.col("_bft") - F.col("last_t"),
+            ).otherwise(F.lit(0)).cast("long")
+            new_state = joined.select(
+                "k",
+                (F.coalesce(F.col("n"), F.lit(0)) + F.coalesce(F.col("_bn"), F.lit(0)))
+                .cast("long")
+                .alias("n"),
+                F.coalesce(F.col("_blt"), F.col("last_t")).alias("last_t"),
+                F.coalesce(F.col("_blv"), F.col("last_v")).alias("last_v"),
+                (
+                    F.coalesce(dec("acc_vt"), F.lit(0).cast("decimal(38,0)"))
+                    + F.coalesce(dec("_bvt"), F.lit(0).cast("decimal(38,0)"))
+                    + F.coalesce(dec("last_v"), F.lit(0).cast("decimal(38,0)"))
+                    * bridge.cast("decimal(38,0)")
+                )
+                .cast("decimal(38,0)")
+                .alias("acc_vt"),
+                (
+                    F.coalesce(F.col("acc_dt"), F.lit(0))
+                    + F.coalesce(F.col("_bdt"), F.lit(0))
+                    + bridge
+                )
+                .cast("long")
+                .alias("acc_dt"),
             )
-            .cast("long")
-            .alias("acc_dt"),
-        )
-        sd.write(new_state)
+            sd.write(new_state)
 
-    try:
-        raw = (
-            spark.readStream.schema(staged_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(fold_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        final = sd.read(spark, state_schema)
-        return (
-            final.select(
+        def readout():
+            return sd.read(spark, state_schema).select(
                 F.col("k").alias("key"),
                 F.col("n").alias("n_events"),
                 F.floor(F.col("acc_dt") / F.lit(1_000_000))
@@ -1737,10 +1614,12 @@ def streaming_twap(
                     ),
                 ).alias("twap"),
             )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+        return fold_batch, readout
+
+    return _fold_stream(
+        spark, "streaming_twap", src, make_fold, slice_on="t", n_slices=n_slices
+    )
 
 
 def streaming_ols_trend(
@@ -1768,73 +1647,9 @@ def streaming_ols_trend(
     for ANY slicing — the streaming_twap contract. Output: the batch
     operator's exact one-row schema ``(n_days, slope, intercept,
     se_slope, t_stat, r2)``."""
-    if n_slices < 1:
-        raise ValueError(
-            f"streaming_ols_trend: n_slices must be >= 1, got {n_slices}"
-        )
-    root = _stream_scratch("ols_stream_")
-    stage = os.path.join(root, "staged")
-    os.makedirs(stage)
 
-    src = events.select(
-        F.date_trunc("day", F.col(ts_col).cast("timestamp"))
-        .cast("date")
-        .alias("day"),
-        F.col(value_col).cast("decimal(30,6)").alias("v"),
-    ).where(F.col("day").isNotNull() & F.col("v").isNotNull())
-    if n_slices > 1:
-        fracs = ", ".join(repr(i / n_slices) for i in range(1, n_slices))
-        cuts = list(
-            src.select(
-                F.expr(
-                    f"percentile(unix_date(day), array({fracs}))"
-                ).alias("_bs")
-            ).first()["_bs"]
-        )
-    else:
-        cuts = []
-    staged_schema = _stage_ordered_slices(
-        src, stage, _range_slice_id(F.unix_date(F.col("day")), cuts), n_slices
-    )
-
-    state_schema = "day date, sv decimal(38,6)"
-    sd = _VersionedState(root)
-
-    def fold_batch(batch_df, _epoch_id):
-        state = sd.read(spark, state_schema)
-        part = batch_df.groupBy("day").agg(
-            F.sum("v").cast("decimal(38,6)").alias("_bv")
-        )
-        merged = state.join(part, "day", "full").select(
-            "day",
-            (
-                F.coalesce(F.col("sv"), F.lit(0).cast("decimal(38,6)"))
-                + F.coalesce(F.col("_bv"), F.lit(0).cast("decimal(38,6)"))
-            )
-            .cast("decimal(38,6)")
-            .alias("sv"),
-        )
-        sd.write(merged)
-
-    try:
-        raw = (
-            spark.readStream.schema(staged_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(fold_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        daily = sd.read(spark, state_schema).select(
-            "day",
-            F.round(F.col("sv").cast("double") * F.lit(unit_scale))
-            .cast("long")
-            .alias("_y"),
-        )
+    def readout(daily: DataFrame) -> DataFrame:
+        daily = daily.withColumnRenamed("_x", "_y")
         # the batch operator's exact finishing readout over the state
         first = daily.agg(F.min("day").alias("_d0"))
         dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
@@ -1872,9 +1687,11 @@ def streaming_ols_trend(
             F.when(ok & (sse > 0), F.round(se_b / s, 9)).alias("se_slope"),
             F.when(ok & (sse > 0), F.round(b / se_b, 9)).alias("t_stat"),
             F.when(ok & (cyy > 0), F.round(b * cxy / cyy, 9)).alias("r2"),
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        )
+
+    return _day_totals_fold(
+        spark, "streaming_ols_trend", events, ts_col, value_col, unit_scale, n_slices, readout
+    )
 
 
 def streaming_max_drawdown(
@@ -1895,75 +1712,10 @@ def streaming_max_drawdown(
     once on the final state. Hash-matches the SAME DuckDB oracle as
     the batch form for ANY slicing. Output: the batch operator's
     one-row schema ``(n_days, max_drawdown, trough_day)``."""
-    if n_slices < 1:
-        raise ValueError(
-            f"streaming_max_drawdown: n_slices must be >= 1, got {n_slices}"
-        )
-    root = _stream_scratch("dd_stream_")
-    stage = os.path.join(root, "staged")
-    os.makedirs(stage)
 
-    src = events.select(
-        F.date_trunc("day", F.col(ts_col).cast("timestamp"))
-        .cast("date")
-        .alias("day"),
-        F.col(value_col).cast("decimal(30,6)").alias("v"),
-    ).where(F.col("day").isNotNull() & F.col("v").isNotNull())
-    if n_slices > 1:
-        fracs = ", ".join(repr(i / n_slices) for i in range(1, n_slices))
-        cuts = list(
-            src.select(
-                F.expr(f"percentile(unix_date(day), array({fracs}))").alias("_bs")
-            ).first()["_bs"]
-        )
-    else:
-        cuts = []
-    staged_schema = _stage_ordered_slices(
-        src, stage, _range_slice_id(F.unix_date(F.col("day")), cuts), n_slices
-    )
-
-    state_schema = "day date, sv decimal(38,6)"
-    sd = _VersionedState(root)
-
-    def fold_batch(batch_df, _epoch_id):
-        state = sd.read(spark, state_schema)
-        part = batch_df.groupBy("day").agg(
-            F.sum("v").cast("decimal(38,6)").alias("_bv")
-        )
-        merged = state.join(part, "day", "full").select(
-            "day",
-            (
-                F.coalesce(F.col("sv"), F.lit(0).cast("decimal(38,6)"))
-                + F.coalesce(F.col("_bv"), F.lit(0).cast("decimal(38,6)"))
-            )
-            .cast("decimal(38,6)")
-            .alias("sv"),
-        )
-        sd.write(merged)
-
-    try:
-        raw = (
-            spark.readStream.schema(staged_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(fold_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    def readout(daily: DataFrame) -> DataFrame:
         # batch finishing readout over the state (timeseries.max_drawdown
         # from the day table onward — restated on the quantized totals)
-        from pyspark.sql import Window
-
-        daily = sd.read(spark, state_schema).select(
-            "day",
-            F.round(F.col("sv").cast("double") * F.lit(unit_scale))
-            .cast("long")
-            .alias("_x"),
-        )
         dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
         tot = daily.agg(
             F.count(F.lit(1)).cast("long").alias("_n"),
@@ -1993,9 +1745,11 @@ def streaming_max_drawdown(
                 / (F.max("_n").cast("double") * F.lit(float(unit_scale)))
             ).alias("max_drawdown"),
             F.when(F.max("_mx") > 0, F.min("day")).alias("trough_day"),
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        )
+
+    return _day_totals_fold(
+        spark, "streaming_max_drawdown", events, ts_col, value_col, unit_scale, n_slices, readout
+    )
 
 
 def streaming_mase(
@@ -2019,73 +1773,12 @@ def streaming_mase(
     slicing. Output: the batch operator's one-row schema
     ``(n_seasonal_pairs, n_naive_pairs, mae_seasonal, mae_naive,
     mase)``."""
-    if n_slices < 1:
-        raise ValueError(f"streaming_mase: n_slices must be >= 1, got {n_slices}")
     if season < 2:
         raise ValueError(f"streaming_mase: season must be >= 2, got {season}")
-    root = _stream_scratch("mase_stream_")
-    stage = os.path.join(root, "staged")
-    os.makedirs(stage)
 
-    src = events.select(
-        F.date_trunc("day", F.col(ts_col).cast("timestamp"))
-        .cast("date")
-        .alias("day"),
-        F.col(value_col).cast("decimal(30,6)").alias("v"),
-    ).where(F.col("day").isNotNull() & F.col("v").isNotNull())
-    if n_slices > 1:
-        fracs = ", ".join(repr(i / n_slices) for i in range(1, n_slices))
-        cuts = list(
-            src.select(
-                F.expr(f"percentile(unix_date(day), array({fracs}))").alias("_bs")
-            ).first()["_bs"]
-        )
-    else:
-        cuts = []
-    staged_schema = _stage_ordered_slices(
-        src, stage, _range_slice_id(F.unix_date(F.col("day")), cuts), n_slices
-    )
-
-    state_schema = "day date, sv decimal(38,6)"
-    sd = _VersionedState(root)
-
-    def fold_batch(batch_df, _epoch_id):
-        state = sd.read(spark, state_schema)
-        part = batch_df.groupBy("day").agg(
-            F.sum("v").cast("decimal(38,6)").alias("_bv")
-        )
-        merged = state.join(part, "day", "full").select(
-            "day",
-            (
-                F.coalesce(F.col("sv"), F.lit(0).cast("decimal(38,6)"))
-                + F.coalesce(F.col("_bv"), F.lit(0).cast("decimal(38,6)"))
-            )
-            .cast("decimal(38,6)")
-            .alias("sv"),
-        )
-        sd.write(merged)
-
-    try:
-        raw = (
-            spark.readStream.schema(staged_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = raw.writeStream.option(
-            "checkpointLocation", os.path.join(root, "_ckpt")
-        ).foreachBatch(fold_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    def readout(daily: DataFrame) -> DataFrame:
         # batch finishing readout: mase_seasonal_naive from the day
         # table onward, restated on the quantized totals
-        daily = sd.read(spark, state_schema).select(
-            "day",
-            F.round(F.col("sv").cast("double") * F.lit(unit_scale))
-            .cast("long")
-            .alias("_x"),
-        )
         dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
 
         def _mae(shift: int, tag: str) -> DataFrame:
@@ -2128,6 +1821,8 @@ def streaming_mase(
                 "mae_naive"
             ),
             F.when(ok, F.round(mae_s / mae_n, 9)).alias("mase"),
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        )
+
+    return _day_totals_fold(
+        spark, "streaming_mase", events, ts_col, value_col, unit_scale, n_slices, readout
+    )

@@ -138,8 +138,3 @@ def to_bigquery_type(decl: str) -> str:
     if name not in SQL_DATA_TYPES:
         raise UnknownSourceType(f"unknown source type: {decl!r}")
     return BIGQUERY_TYPE[name]
-
-
-def is_image_type(decl: str) -> bool:
-    """IMAGE columns get base64-encoded en route (BigQueryTableRowDoFn.java:42-46)."""
-    return parse_type_decl(decl)[0] == "IMAGE"

@@ -6,10 +6,12 @@ URL-scheme config loader hook (ServerUtil.java:252-272 reads gs://)."""
 from __future__ import annotations
 
 import json
+import os
 import sys
 import types
 
 import pandas as pd
+import pytest
 
 from dlp_rdb_bq_import_spark.config import load_dlp_configs
 from dlp_rdb_bq_import_spark.streaming.jobs import chunked_ingest
@@ -676,9 +678,76 @@ def test_streaming_ewma_equals_single_pass_recursion(spark, sf_dir):
     g = {r["event_id"]: r["ewma"] for r in got}
     assert a == g
 
-    import pytest
-
     with pytest.raises(ValueError):
         streaming_ewma(spark, events, alpha=1.5)
+
+
+_SLICED_TWINS = (
+    "streaming_ewma",
+    "streaming_quantile_digest",
+    "streaming_twap",
+    "streaming_ols_trend",
+    "streaming_max_drawdown",
+    "streaming_mase",
+)
+
+
+@pytest.mark.parametrize("twin", _SLICED_TWINS)
+def test_sliced_twins_reject_zero_slices(spark, sf_dir, tmp_path, monkeypatch, twin):
+    """Every twin that stages ordered slices rejects ``n_slices < 1``
+    with the same ValueError (one check in the shared driver) and
+    leaves no scratch behind."""
+    from dlp_rdb_bq_import_spark import harness
+    from dlp_rdb_bq_import_spark.streaming import jobs
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SCRATCH", str(tmp_path))
+    events = harness.t(spark, sf_dir, "events")
+    args = ("value",) if twin == "streaming_quantile_digest" else ()
+    with pytest.raises(ValueError, match=f"{twin}: n_slices must be >= 1, got 0"):
+        getattr(jobs, twin)(spark, events, *args, n_slices=0)
+    assert os.listdir(tmp_path) == []
+
+
+def test_stream_scratch_removed_on_every_exit(spark, sf_dir, tmp_path, monkeypatch):
+    """The per-call scratch root ($SPARK_GRAFT_STREAM_SCRATCH, tmpfs by
+    default, i.e. RAM) is gone after a twin returns or raises — a bad
+    column, a bad ``n_slices``, a staging job that fails and a fold that
+    fails included."""
+    from pyspark.errors import AnalysisException, StreamingQueryException
+    from pyspark.sql import functions as F
+
+    from dlp_rdb_bq_import_spark import harness
+    from dlp_rdb_bq_import_spark.streaming.jobs import (
+        streaming_bottomk,
+        streaming_cms,
+        streaming_quantile_digest,
+        streaming_twap,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SCRATCH", str(tmp_path))
+    events = harness.t(spark, sf_dir, "events").limit(500)
+    with pytest.raises(AnalysisException):
+        streaming_twap(spark, events, key_col="nope")
+    assert os.listdir(tmp_path) == []
+    with pytest.raises(AnalysisException):
+        streaming_cms(spark, events, "nope")
+    assert os.listdir(tmp_path) == []
     with pytest.raises(ValueError):
-        streaming_ewma(spark, events, n_slices=0)
+        streaming_quantile_digest(spark, events, "value", n_slices=0)
+    assert os.listdir(tmp_path) == []
+    boom = events.select(
+        "event_id",
+        F.when(F.col("event_id") >= 0, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("value"))
+        .alias("value"),
+    )
+    with pytest.raises(Exception, match="boom"):  # fails while staging
+        streaming_bottomk(spark, boom, "event_id", 5)
+    assert os.listdir(tmp_path) == []
+    with pytest.raises(StreamingQueryException):  # fails inside the fold
+        streaming_bottomk(spark, events, "nope", 5)
+    assert os.listdir(tmp_path) == []
+
+    sketch = streaming_cms(spark, events, "event_type")
+    assert sketch.count() > 0
+    assert os.listdir(tmp_path) == []
